@@ -5,7 +5,8 @@ engine's reference corpus (TPC-H-ish star schema, an `events` stream, a
 `documents` text table with 5% near-duplicates and an `embeddings`
 table of unit vectors), one parquet file with one row group each.  The
 same (sf, seed) always yields byte-identical files, so oracle digests
-computed once stay valid.
+computed once stay valid.  `stream_batches` writes the seeded input
+files of the streaming ingest.
 """
 
 from __future__ import annotations
@@ -187,6 +188,46 @@ def _tables(sf: float, seed: int) -> dict[str, pa.Table]:
         }
     )
     return out
+
+
+def stream_batches(
+    in_dir: str, seed: int, corpus_texts: list[str], n_batches: int, batch_rows: int
+) -> list[list[tuple[int, str]]]:
+    """Writes `n_batches` parquet files of (doc_id, text) into `in_dir`
+    for the streaming ingest and returns their rows in arrival order.
+    A third of the rows repeat an earlier text (from the corpus, an
+    earlier batch or the same batch) with one token changed or one
+    appended; the rest are fresh texts over the corpus vocabulary.
+    Modification times are set one apart, in batch order, because the
+    file source hands files out oldest first."""
+    rng = np.random.default_rng([seed, 7])
+    pool = list(corpus_texts)
+    next_id = 1_000_000
+    batches = []
+    os.makedirs(in_dir, exist_ok=True)
+    for b in range(n_batches):
+        rows = []
+        for _ in range(batch_rows):
+            if rng.random() < 1 / 3:
+                toks = pool[int(rng.integers(0, len(pool)))].split(" ")
+                if rng.random() < 0.5:
+                    toks[int(rng.integers(0, len(toks)))] = str(rng.choice(_VOCAB))
+                else:
+                    toks.append("dup")
+                text = " ".join(toks)
+            else:
+                text = " ".join(rng.choice(_VOCAB, int(rng.integers(10, 101))))
+            pool.append(text)
+            rows.append((next_id, text))
+            next_id += 1
+        path = os.path.join(in_dir, f"batch{b:03d}.parquet")
+        pq.write_table(
+            pa.table({"doc_id": pa.array([r[0] for r in rows], pa.int64()), "text": [r[1] for r in rows]}),
+            path,
+        )
+        os.utime(path, (1_600_000_000 + b, 1_600_000_000 + b))
+        batches.append(rows)
+    return batches
 
 
 def ensure_corpus(root: str, sf: float, seed: int) -> tuple[str, str]:

@@ -1,14 +1,13 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload olap_mix --seed 1 --seconds 8 --trace 0
+    python3 perfbench/run.py --workload olap_mix --seed 1 --seconds 12 --trace 0
 
 Run from the repository root.  The corpus is generated (once, cached
-under perfbench/.work/) from a fixed corpus seed; --seed sets the query
-order of every pass.  Set-up is timed three times per run, by two probe
-processes and the measuring process started together, and `setup_s` is
-their median.  The measuring process runs one closed-loop client on
-Spark local[nproc]; its JVM and Python workers are sampled from /proc
-for peak RSS.  The last line of stdout is the result JSON; the lines
+under perfbench/.work/) from a fixed corpus seed; --seed sets the
+operation order of every pass and the streaming input.  One worker
+process sets Spark up (`setup_s`) and runs one closed-loop client on
+local[nproc]; its JVM and Python workers are sampled from /proc for
+peak RSS.  The last line of stdout is the result JSON; the lines
 before it carry the host record and the details behind each metric.
 See README.md.
 """
@@ -30,10 +29,10 @@ WORK = os.path.join(HERE, ".work")
 PKG = "rick_and_morty_data_pipeline_project_spark"
 
 # The corpus is fixed so that oracle digests can be cached; at sf0.01 one
-# pass of either workload takes about 5 s on four cores.
+# pass takes about 7 s (olap_mix) and 15 s (llm_dedup_vector) on four
+# cores.
 SF = 0.01
 CORPUS_SEED = 42
-SETUP_SAMPLES = 3
 RUN_LIMIT_S = 170
 TAIL_MIN_ABOVE = 10
 
@@ -123,29 +122,27 @@ def start_child(args: list[str], env: dict, log: str) -> subprocess.Popen:
         )
 
 
-def wait_children(procs: dict, deadline: float, sample) -> None:
-    """Waits for the {log path: process} children to exit, calling
-    `sample` every 0.25 s meanwhile; raises if one failed."""
-    while any(p.poll() is None for p in procs.values()):
+def wait_child(proc: subprocess.Popen, log: str, deadline: float, sample) -> None:
+    """Waits for the worker to exit, calling `sample` every 0.25 s
+    meanwhile; raises if it failed."""
+    while proc.poll() is None:
         if time.monotonic() > deadline:
             raise TimeoutError("benchmark exceeded its time limit")
         sample()
         time.sleep(0.25)
-    for log, p in procs.items():
-        if p.returncode != 0:
-            with open(log, errors="replace") as f:
-                sys.stderr.write(f.read()[-4000:])
-            raise RuntimeError(f"{os.path.basename(log)}: worker exited with {p.returncode}")
+    if proc.returncode != 0:
+        with open(log, errors="replace") as f:
+            sys.stderr.write(f.read()[-4000:])
+        raise RuntimeError(f"worker exited with {proc.returncode}")
 
 
-def stop_children(procs: dict) -> None:
-    """Kills what still runs, then waits for every process the children
-    started (the JVM outlives its Python driver by a moment)."""
-    for p in procs.values():
-        if p.poll() is None:
-            os.killpg(p.pid, signal.SIGKILL)
-        p.wait()
-        _reap_session(p.pid)
+def stop_child(proc: subprocess.Popen) -> None:
+    """Kills the worker if it still runs, then waits for every process
+    it started (the JVM outlives the worker by a moment)."""
+    if proc.poll() is None:
+        os.killpg(proc.pid, signal.SIGKILL)
+    proc.wait()
+    _reap_session(proc.pid)
 
 
 def _steal(t0: list[int], t1: list[int]) -> float:
@@ -188,14 +185,11 @@ def main() -> int:
     sf_dir, data_digest = datagen.ensure_corpus(os.path.join(WORK, "data"), SF, CORPUS_SEED)
     env = child_env(host["nproc"])
     out = os.path.join(WORK, "result.json")
-    go = os.path.join(WORK, "go")
-    if os.path.exists(go):
-        os.remove(go)
     trace_out = os.path.join(WORK, f"trace-{a.workload}-{a.seed}.json")
     run_log = os.path.join(WORK, "run.log")
-    main_proc = start_child(
+    proc = start_child(
         [
-            "run", "--data", sf_dir, "--out", out, "--go", go, "--workload", a.workload,
+            "--data", sf_dir, "--work", WORK, "--out", out, "--workload", a.workload,
             "--seed", str(a.seed), "--seconds", str(a.seconds), "--trace", str(a.trace),
             "--sf", str(SF), "--data-digest", data_digest,
             "--digest-cache", os.path.join(WORK, "digests-cache.json"),
@@ -204,41 +198,28 @@ def main() -> int:
         env,
         run_log,
     )
-    # The set-up samples start together with the measuring process, which
-    # waits for the probes to end before it checks or times anything.
-    probes = {}
-    for k in range(SETUP_SAMPLES - 1):
-        pout = os.path.join(WORK, f"probe{k}.json")
-        probes[pout + ".log"] = start_child(["probe", "--data", sf_dir, "--out", pout], env, pout + ".log")
     peak = 0
 
     def sample():
         nonlocal peak
-        if main_proc.poll() is None:
-            peak = max(peak, tracing.rss_bytes(main_proc.pid))
+        if proc.poll() is None:
+            peak = max(peak, tracing.rss_bytes(proc.pid))
 
     try:
-        wait_children(probes, deadline, sample)
-        open(go, "w").close()
-        t_setup = time.monotonic()
-        wait_children({run_log: main_proc}, deadline, sample)
+        wait_child(proc, run_log, deadline, sample)
     finally:
-        stop_children({**probes, run_log: main_proc})
+        stop_child(proc)
     with open(out) as f:
         res = json.load(f)
-    setups = [res["setup_s"]]
-    for log in probes:
-        with open(log[: -len(".log")]) as f:
-            setups.append(json.load(f)["setup_s"])
 
     checks = res["checks"]
     timed = res["timed"]
     failed = sum(not c["ok"] for c in checks) + sum(not r["ok"] for r in timed)
     attempted = len(checks) + len(timed)
-    for c in checks + timed:
+    for c in checks + timed + res.get("traced_errors", []):
         if not c["ok"]:
             print(json.dumps({"failed": c["query"], "error": c.get("error")}), file=sys.stderr)
-    walls = [r["wall_s"] for r in timed if r["ok"]]
+    walls = [r["wall_s"] for r in timed]
     tail_v, tail_p = tail(walls)
     per_query = {}
     for r in timed:
@@ -248,7 +229,7 @@ def main() -> int:
             {
                 "workload": a.workload,
                 "sf": SF,
-                "setup_samples_s": setups,
+                "setup_split_s": {k: res[k] for k in ("import_s", "get_spark_s", "first_job_s", "footers_s")},
                 "query_samples": len(walls),
                 # the guide's tail: highest percentile with >= 10 executions above it
                 "query_tail_s": tail_v,
@@ -258,9 +239,10 @@ def main() -> int:
                 # share of the host's CPU time stolen by other guests during the run
                 "steal_frac": _steal(cpu0, cpu_times()),
                 "phase_s": {
-                    "setup": t_setup - t_start,
+                    "setup": res["setup_s"],
                     "oracle": res["oracle_s"],
                     "check": res["check_s"],
+                    "warm": res["warm_s"],
                     "timed": sum(res["pass_wall_s"]),
                     "total": time.monotonic() - t_start,
                 },
@@ -280,16 +262,19 @@ def main() -> int:
         declared = declared["per_layer"]
     else:
         values = {
-            "setup_s": statistics.median(setups),
+            "setup_s": res["setup_s"],
             "query_p50_s": statistics.median(walls),
-            # median over passes, so one pass slowed by the host does not set it
-            "query_throughput_qps": statistics.median(
-                len(timed) / len(res["pass_wall_s"]) / w for w in res["pass_wall_s"]
-            ),
+            # a pass's operations over the sum of each operation's median
+            # time, so a burst of host load in one pass does not set it
+            "query_throughput_qps": len(per_query)
+            / sum(statistics.median(v) for v in per_query.values()),
         }
         declared = declared["end_to_end"]
-    # a layer the workload never enters reads 0 (e.g. an operator olap_mix does not call)
-    metrics = {m["name"]: {"value": values.get(m["name"], 0), "unit": m["unit"]} for m in declared}
+    missing = [m["name"] for m in declared if m["name"] not in values]
+    if missing:
+        print(f"perfbench: the run produced no value for {missing}", file=sys.stderr)
+        return 1
+    metrics = {m["name"]: {"value": values[m["name"]], "unit": m["unit"]} for m in declared}
     print(
         json.dumps(
             {

@@ -3,8 +3,10 @@
 A span is (name, layer, start, end, parent, run id, job counter at start
 and end).  Spans stay in memory; `Tracer.dump` writes them out.  Layer
 wrappers are installed by rebinding every module global that holds a
-traced function, because query modules import operator functions by
-name; `uninstall` restores the originals.
+traced function, because query, pipeline and streaming modules import
+operator functions by name; `uninstall` restores the originals.  Spans
+begun on another thread (a streaming query's foreachBatch callback)
+nest under the span that is open while the caller waits for it.
 """
 
 from __future__ import annotations
@@ -96,17 +98,28 @@ def _public_functions(module) -> list:
     ]
 
 
+def operator_targets() -> dict:
+    """{function: (span name, layer)} for every public function of
+    operators/*.py, importing each operator module."""
+    import importlib
+    import pkgutil
+
+    ops = importlib.import_module(f"{PKG}.operators")
+    targets = {}
+    for info in pkgutil.iter_modules(ops.__path__):
+        mod = importlib.import_module(f"{ops.__name__}.{info.name}")
+        for f in _public_functions(mod):
+            targets[f] = (f"operators.{f.__name__}", "operators")
+    return targets
+
+
 def install(tracer: Tracer) -> list[tuple[dict, str, object]]:
     """Wraps sources.corpus.load_table and every public function of
     operators/*.py wherever a loaded package module binds it.  Returns
     the undo list for `uninstall`."""
-    targets = {}
+    targets = operator_targets()
     corpus = sys.modules[f"{PKG}.sources.corpus"]
     targets[corpus.load_table] = ("sources.load_table", "sources")
-    for mname, mod in list(sys.modules.items()):
-        if mname.startswith(f"{PKG}.operators.") and mod is not None:
-            for f in _public_functions(mod):
-                targets[f] = (f"operators.{f.__name__}", "operators")
     undo = []
     for mname, mod in list(sys.modules.items()):
         if not mname.startswith(PKG) or mod is None:
