@@ -1,9 +1,9 @@
 """Engine-side half of the benchmark: one process, one Spark session.
 
-Times set-up, checks every operation once against its oracle
-(untimed, several at a time), runs one untimed warm pass, then runs
-timed passes of the workload in a seeded order, one operation at a time
-(one closed-loop client), as many as fill --seconds on a quiet host.
+Times set-up, checks every query once against its oracle (untimed,
+several at a time), runs untimed warm passes, then runs timed passes
+of the workload in a seeded order, one operation at a time (one
+closed-loop client), as many as fill --seconds on a quiet host.
 Results go to --out as JSON.
 
 An operation is a catalog query (construct + noop-sink execute), one
@@ -60,14 +60,23 @@ WORKLOADS = {
     ],
 }
 
+# Operations that run in traced runs only.  Together they took 9 of a
+# pass's 14 s on a quiet host, so with them a gated run fitted a single
+# timed pass; the traced run measures their layers (see README.md).
+TRACED_ONLY = (CURATE, STREAM)
 CHECK_THREADS = 3
 # Streaming input: STREAM_BATCHES files of STREAM_ROWS documents each,
 # drained one file per micro-batch.
 STREAM_BATCHES = 2
 STREAM_ROWS = 50
-# Seconds one warm pass takes on a quiet 4-core host (pyspark 4.1.2,
-# OpenJDK 17); a run times ceil(--seconds / this) passes.
-NOMINAL_PASS_S = {"olap_mix": 5.0, "llm_dedup_vector": 14.0}
+# Seconds one warm untraced pass takes on a quiet 4-core host (pyspark
+# 4.1.2, OpenJDK 17); a run times ceil(--seconds / this) passes.
+NOMINAL_PASS_S = {"olap_mix": 4.3, "llm_dedup_vector": 4.2}
+# Untimed passes before the timed ones; olap_mix's passes were within
+# 10% of each other after one.
+WARM_PASSES = {"olap_mix": 1, "llm_dedup_vector": 3}
+# A traced run times U T U T U: untraced and traced passes alternate.
+TRACED_PASSES = 2
 
 # Physical operators that run Python in the PySpark workers.
 _PY_EVAL = re.compile(
@@ -139,7 +148,7 @@ class Bench:
     """The operations of a run and the expected results they are
     checked against."""
 
-    def __init__(self, spark, sf_dir: str, work: str, seed: int, digests: dict):
+    def __init__(self, spark, sf_dir: str, work: str, seed: int, digests: dict, ops):
         import pyarrow.parquet as pq
 
         import datagen
@@ -150,9 +159,11 @@ class Bench:
         shutil.rmtree(self.exec_dir, ignore_errors=True)
         self._n = itertools.count()
         docs_path = os.path.join(sf_dir, "documents.parquet")
+        self.docs_bytes = os.path.getsize(docs_path)
+        if not set(TRACED_ONLY) & set(ops):
+            return
         t = pq.read_table(docs_path, columns=["doc_id", "text"])
         docs = list(zip(t.column("doc_id").to_pylist(), t.column("text").to_pylist()))
-        self.docs_bytes = os.path.getsize(docs_path)
         self.curate_expected = reference.curate(docs)
         self.stream_in = os.path.join(self.exec_dir, "stream-in")
         batches = datagen.stream_batches(
@@ -295,9 +306,9 @@ class Bench:
 
 
 def check_all(bench: Bench, names) -> list[dict]:
-    """Untimed: runs every operation once, CHECK_THREADS at a time, the
-    long pipeline operations first, and compares each result with its
-    oracle.  These first executions cost 2-6x a later one."""
+    """Untimed: runs every query once, CHECK_THREADS at a time, and
+    compares each result with its oracle.  These first executions cost
+    2-6x a later one."""
     from concurrent.futures import ThreadPoolExecutor
 
     def one(name):
@@ -306,7 +317,7 @@ def check_all(bench: Bench, names) -> list[dict]:
         return rec
 
     with ThreadPoolExecutor(CHECK_THREADS) as pool:
-        return list(pool.map(one, sorted(names, key=lambda n: n not in (CURATE, STREAM))))
+        return list(pool.map(one, names))
 
 
 def python_eval_nodes(recs) -> int:
@@ -434,20 +445,27 @@ def main() -> int:
     import oracle
     import tracing
 
-    names = WORKLOADS[a.workload]
-    queries = [n for n in names if n not in (CURATE, STREAM)]
+    # `plain`: the operations of an untraced pass; a traced run's traced
+    # passes also run the TRACED_ONLY ones.  Those are checked on every
+    # execution, so the check phase runs the queries only.
+    plain = [n for n in WORKLOADS[a.workload] if n not in TRACED_ONLY]
+    names = WORKLOADS[a.workload] if a.trace else plain
     t0 = time.perf_counter()
-    digests = oracle.expected(queries, a.data, a.sf, a.data_digest, a.digest_cache)
-    bench = Bench(spark, a.data, a.work, a.seed, digests)
+    digests = oracle.expected(plain, a.data, a.sf, a.data_digest, a.digest_cache)
+    bench = Bench(spark, a.data, a.work, a.seed, digests, names)
     t1 = time.perf_counter()
-    res["checks"] = check_all(bench, names)
+    res["checks"] = check_all(bench, plain)
     t2 = time.perf_counter()
     rng = random.Random(a.seed)
-    # One untimed pass run like the timed ones.  Every execution makes
-    # the JVM compile newly generated code, less with each repeat: after
-    # the checks alone, the first timed pass ran about 30% slower than
-    # the third.
-    warm = [bench.run(n) for n in rng.sample(names, len(names))]
+    # Untimed passes run like the timed ones.  Every execution makes the
+    # JVM compile newly generated code, less with each repeat: after the
+    # checks, a pass of llm_dedup_vector took 5.3 s, the fifth 3.8 s,
+    # and later ones 3.7-4.3 s.  A host whose other guests are busy
+    # also slows the JIT compiler threads, so a run timed early on that
+    # curve read slower than the contention alone explains.
+    # The traced-only operations are warmed in the first of these only.
+    warm_ops = [names] + [plain] * (WARM_PASSES[a.workload] - 1)
+    warm = [bench.run(n) for ops in warm_ops for n in rng.sample(ops, len(ops))]
     for r in warm:
         r.pop("df", None)
     res["checks"] += warm
@@ -455,7 +473,7 @@ def main() -> int:
 
     tracer = tracing.Tracer(spark) if a.trace else None
     me = os.getpid()
-    timed, traced, plain_wall, traced_wall = [], [], [], []
+    timed, traced, plain_wall, traced_wall, traced_plain_s = [], [], [], [], []
     cpu = {"jvm": 0.0, "python": 0.0}
     counts = {"queries.exec_stages": 0, "queries.exec_tasks": 0, "functions.python_eval_nodes": 0}
     # The number of timed passes follows from --seconds and the pass's
@@ -464,12 +482,13 @@ def main() -> int:
     # faster host would measure a later, faster point of that curve.
     n_plain = max(1, math.ceil(a.seconds / NOMINAL_PASS_S[a.workload]))
     # A traced run alternates untraced and traced passes and ends on an
-    # untraced one (U T U ...), so a steady drift between passes cancels
+    # untraced one (U T U T U), so a steady drift between passes cancels
     # out of the traced-vs-untraced difference, the tracing overhead.
-    schedule = ["T", "U"] * max(1, n_plain - 1) if a.trace else ["U"] * (n_plain - 1)
+    schedule = ["T", "U"] * TRACED_PASSES if a.trace else ["U"] * (n_plain - 1)
     for kind in ["U"] + schedule:
-        order = rng.sample(names, len(names))
         trace_this = kind == "T"
+        ops = names if trace_this else plain
+        order = rng.sample(ops, len(ops))
         if trace_this:
             undo = tracing.install(tracer)
             first_span = len(tracer.spans)
@@ -500,6 +519,7 @@ def main() -> int:
         counts["functions.python_eval_nodes"] += python_eval_nodes(recs)
         traced.extend(recs)
         traced_wall.append(wall)
+        traced_plain_s.append(sum(r["wall_s"] for r in recs if r["query"] in plain))
     res["timed"] = timed
     res["pass_wall_s"] = plain_wall
     if a.trace:
@@ -507,14 +527,15 @@ def main() -> int:
         operator_fns = sorted({v[0].split(".", 1)[1] for v in tracing.operator_targets().values()})
         layers = {**layer_metrics(tracer, operator_fns), **pipeline_metrics(traced, bench.docs_bytes), **counts}
         layers = {k: v / n for k, v in layers.items()}
-        mean_wall = sum(traced_wall) / n
         layers["functions.python_cpu_s"] = cpu["python"] / n
         layers["spark.jvm_cpu_s"] = cpu["jvm"] / n
         layers["spark.core_util"] = (cpu["jvm"] + cpu["python"]) / (
             sum(traced_wall) * len(os.sched_getaffinity(0))
         )
-        layers["trace.overhead_frac"] = mean_wall / (sum(plain_wall) / len(plain_wall)) - 1
-        layers["trace.query_throughput_qps"] = len(names) / mean_wall
+        # both over the operations an untraced pass runs
+        plain_s = sum(r["wall_s"] for r in timed) / len(plain_wall)
+        layers["trace.overhead_frac"] = statistics.mean(traced_plain_s) / plain_s - 1
+        layers["trace.query_throughput_qps"] = len(plain) / statistics.mean(traced_plain_s)
         layers["session.get_spark_s"] = res["get_spark_s"]
         layers["session.first_job_s"] = res["first_job_s"]
         res["layers"] = layers
