@@ -34,6 +34,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from rick_and_morty_data_pipeline_project_spark.functions.emotions import EMOTIONS
+from rick_and_morty_data_pipeline_project_spark.operators.parallelism import (
+    local_relation,
+)
 from rick_and_morty_data_pipeline_project_spark.operators.topk import (
     per_emotion_topk_prefixes,
 )
@@ -168,7 +171,7 @@ def greedy_match_without_replacement(
         + ([f"matched_{right_name} string"] if right_name else [])
         + ["right_top_emotion string", "right_second_emotion string"]
     )
-    return spark.createDataFrame(out_rows, ", ".join(schema_cols))
+    return local_relation(spark, out_rows, ", ".join(schema_cols))
 
 
 def best_match_with_replacement(
@@ -197,7 +200,8 @@ def best_match_with_replacement(
     # simply never matched by the final LEFT join (parity proven
     # row-exact at sf0.1 and by the driver oracle at 3 SFs), and the
     # stage-2 window grows only to the fixed 30·k1 bound.
-    pairs = left.sparkSession.createDataFrame(
+    pairs = local_relation(
+        left.sparkSession,
         [(a, b) for a in emotions for b in emotions if a != b],
         "top_emotion string, second_emotion string",
     )

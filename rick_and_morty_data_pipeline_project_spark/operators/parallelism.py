@@ -1,8 +1,14 @@
-"""Compute-layout helpers for CPU-heavy map pipelines."""
+"""Compute-layout helpers: fan-out for CPU-heavy map pipelines, and
+driver-side rows as a local relation."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Iterable
+
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def fan_out(df: DataFrame) -> DataFrame:
@@ -36,3 +42,27 @@ def fan_out(df: DataFrame) -> DataFrame:
     if 0 < n_files < target:
         return df.repartition(target)
     return df
+
+
+def local_relation(
+    spark: SparkSession, rows: Iterable[tuple], ddl: str | StructType
+) -> DataFrame:
+    """``spark.createDataFrame(rows, ddl)`` for small driver-side data,
+    planned as a ``LocalTableScan``.
+
+    ``createDataFrame`` over Python rows plans a ``Scan ExistingRDD`` of
+    pickled rows, so every execution starts Python-worker tasks to
+    unpickle data the driver already holds.  An Arrow table built in
+    the ``ddl`` schema is kept as a ``LocalRelation`` instead: no
+    Python workers and no job until the plan itself runs.  Rows, nulls
+    and schema come out as ``createDataFrame`` gives them; empty
+    ``rows`` give an empty relation of the same schema.
+    """
+    schema = ddl if isinstance(ddl, StructType) else StructType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows, strict=True)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table)

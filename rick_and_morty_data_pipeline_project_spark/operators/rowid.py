@@ -42,6 +42,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from rick_and_morty_data_pipeline_project_spark.operators.parallelism import (
+    local_relation,
+)
+
 
 def dense_row_ids(
     df: DataFrame,
@@ -93,15 +97,7 @@ def dense_row_ids(
         acc += r["_n"]
     # explicit schema: an empty input yields an empty offsets list,
     # which schema inference would reject
-    off = df.sparkSession.createDataFrame(
-        offsets,
-        T.StructType(
-            [
-                T.StructField("_pid", T.IntegerType()),
-                T.StructField("_offset", T.LongType()),
-            ]
-        ),
-    )
+    off = local_relation(df.sparkSession, offsets, "_pid int, _offset long")
     return (
         numbered.join(F.broadcast(off), "_pid")
         .withColumn(id_col, (F.col("_offset") + F.col("_local")))

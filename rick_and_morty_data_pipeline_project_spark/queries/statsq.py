@@ -677,6 +677,10 @@ def customer_gini_revenue(spark, sf_dir):
     """
     from pyspark.sql.window import Window
 
+    from rick_and_morty_data_pipeline_project_spark.operators.parallelism import (
+        local_relation,
+    )
+
     rev = (
         t(spark, sf_dir, "orders")
         .groupBy("o_custkey")
@@ -705,7 +709,7 @@ def customer_gini_revenue(spark, sf_dir):
     for bkt in sorted(hist):
         offsets.append((bkt, acc))
         acc += hist[bkt]
-    off_df = spark.createDataFrame(offsets, "bucket int, off long")
+    off_df = local_relation(spark, offsets, "bucket int, off long")
     win = Window.partitionBy("bucket").orderBy("cents", "o_custkey")
     ranked = (
         bucketed.withColumn("_rn", F.row_number().over(win).cast("long"))

@@ -1,9 +1,10 @@
 """SparkSession factory with scale-oriented defaults.
 
 The reference uses a single SQLite connection as its "engine"
-(Scraper.py:247-251); here the session is the engine.  Defaults are chosen
-for the driver harness (local[32], 128 GiB) but every knob is the one you
-would also set on a 1000-executor cluster:
+(Scraper.py:247-251); here the session is the engine.  Local parallelism
+defaults to the host's CPU count (``SPARK_GRAFT_CPUS`` or an explicit
+``cpus`` overrides it), and every other knob is the one you would also
+set on a 1000-executor cluster:
 
 * AQE on — runtime partition coalescing, skew-join splitting, and
   dynamic broadcast conversion replace hand-tuned shuffle counts.
@@ -27,7 +28,7 @@ def get_spark(
     cpus: str | int | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1
     # Shuffle partition count ~ cores for local mode; AQE coalesces further.
     shuffle_partitions = shuffle_partitions or int(
         os.environ.get("SPARK_SHUFFLE_PARTITIONS", str(max(int(cpus), 8)))

@@ -8,8 +8,16 @@ and partition pruning for free.
 
 from __future__ import annotations
 
+import os
+import stat
+import threading
+import weakref
+from contextlib import contextmanager
+from typing import Iterator
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = [
     "region",
@@ -37,46 +45,112 @@ BROADCAST_DIMS = {"region", "nation"}
 # text-dedup pipelines do it themselves via operators/dedup.fan_out.
 
 
+# NOTE on the schema cache: ``spark.read.parquet`` infers the schema
+# from the file footers with one Spark job (~70 ms on a 4-core host)
+# every time it is called, and a query rebuilds its corpus DataFrames
+# on every call — 16 such jobs per olap_mix pass, for a schema that
+# never changed.  Spark SQL resolves a data source's schema once, at
+# analysis time; ``_read`` does the same across calls: the first read
+# of a regular local file keeps the inferred schema, keyed by the
+# session and the file's real path, and is dropped when the file's
+# ``st_mtime_ns`` or ``st_size`` changes (a rewritten table is
+# re-inferred).  Later reads pass it to ``spark.read.schema(...)`` and
+# start no job.  Each call still builds a fresh relation with new
+# attribute ids, so two loads of one table self-join as before.  Any
+# other path (a directory, a remote URI) is read as before.
+
 _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
+# session -> {real path: (st_mtime_ns, st_size, schema)}; a stopped
+# and collected session takes its entries with it.
+_schemas: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_schemas_lock = threading.Lock()
+# Serializes the save/set/restore of the session-wide nanos conf, so
+# two threads loading ``events`` cannot restore each other's value.
+_nanos_lock = threading.Lock()
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name == "events":
-        # events.ts arrives in whatever physical type the corpus
-        # generator used — TIMESTAMP(NANOS) (Spark's vectorized reader
-        # rejects it; read nanos as long and truncate to micros, the
-        # value DuckDB produces for its micro-resolution type) or naive
-        # TIMESTAMP(MICROS) (Spark infers TIMESTAMP_NTZ).  Normalize to
-        # session-local TIMESTAMP either way: the session timezone is
-        # pinned to UTC (session.py), so the NTZ→TZ cast is wall-clock
-        # preserving and epoch extraction matches DuckDB's epoch_us on
-        # the same naive values.
-        # The legacy conf is scoped save/set/restore: it is captured into
-        # the plan at read/analysis time (the restored value does not
-        # affect this df's later execution), so a later parquet read of
-        # an unrelated nanos column in the same session is not silently
-        # decoded as bigint.  Not thread-safe if the session is shared.
+
+def _read(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring a local file's schema
+    once per file version (see the NOTE above)."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    if not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    real = os.path.realpath(path)
+    version = (st.st_mtime_ns, st.st_size)
+    with _schemas_lock:
+        hit = _schemas.get(spark, {}).get(real)
+    if hit is not None and hit[:2] == version:
+        return spark.read.schema(hit[2]).parquet(path)
+    df = spark.read.parquet(path)
+    with _schemas_lock:
+        _schemas.setdefault(spark, {})[real] = (*version, df.schema)
+    return df
+
+
+@contextmanager
+def _nanos_as_long(spark: SparkSession) -> Iterator[None]:
+    """Scoped save/set/restore of the legacy nanos-as-long parquet conf.
+
+    events.ts arrives in whatever physical type the corpus generator
+    used.  Spark's vectorized reader rejects TIMESTAMP(NANOS); under
+    this conf it reads as bigint, which ``normalize_events_ts`` then
+    truncates to micros.  The conf is captured into the plan at
+    read/analysis time (the restored value does not affect the
+    DataFrame's later execution), so a later parquet read of an
+    unrelated nanos column in the same session is not silently decoded
+    as bigint.  The module lock makes the scope safe for threads that
+    share the session.
+    """
+    with _nanos_lock:
         try:
             prev = spark.conf.get(_NANOS_CONF)
         except Exception:
             prev = None
         spark.conf.set(_NANOS_CONF, "true")
         try:
-            df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-            ts_type = dict(df.dtypes).get("ts")
-            if ts_type == "bigint":
-                df = df.withColumn(
-                    "ts", F.expr("timestamp_micros(ts div 1000)")
-                )
-            elif ts_type == "timestamp_ntz":
-                df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+            yield
         finally:
             if prev is None:
                 spark.conf.unset(_NANOS_CONF)
             else:
                 spark.conf.set(_NANOS_CONF, prev)
-        return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def events_schema(spark: SparkSession, path: str) -> StructType:
+    """The raw schema of an events parquet file as ``load_table`` reads
+    it, before ``normalize_events_ts``; cached like any table's."""
+    with _nanos_as_long(spark):
+        return _read(spark, path).schema
+
+
+def normalize_events_ts(df: DataFrame) -> DataFrame:
+    """Normalize events.ts to session-local TIMESTAMP.
+
+    TIMESTAMP(NANOS) read as bigint becomes micros (the value DuckDB
+    produces for its micro-resolution type); naive TIMESTAMP(MICROS),
+    which Spark infers as TIMESTAMP_NTZ, is cast.  The session timezone
+    is pinned to UTC (session.py), so the NTZ→TZ cast is wall-clock
+    preserving and epoch extraction matches DuckDB's epoch_us on the
+    same naive values.
+    """
+    ts_type = dict(df.dtypes).get("ts")
+    if ts_type == "bigint":
+        return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    if ts_type == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    path = f"{sf_dir}/{name}.parquet"
+    if name == "events":
+        with _nanos_as_long(spark):
+            return normalize_events_ts(_read(spark, path))
+    return _read(spark, path)
 
 
 def register_views(

@@ -8,11 +8,16 @@ for reference-parity tests.  Scores follow the observed magnitudes
 (episode scores uniform(0,1), strain scores uniform(0,0.12), 10-decimal
 rounding); names exercise the ':'/',' normalization branches
 (Scraper.py:227-231) including the exempt ids {19,25,32,35}.
+
+``write_shipped_db`` lays the same rows out the way the reference's
+shipped ``510FinalProject.db`` stores them, schema traps included, so
+``sources/reference_db.py`` can be exercised without that file.
 """
 
 from __future__ import annotations
 
 import random
+import sqlite3
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -95,3 +100,60 @@ def emotion_dim(spark: SparkSession) -> DataFrame:
         [(i + 1, e.title()) for i, e in enumerate(EMOTIONS)],
         "emotion_id int, emotion_name string",
     )
+
+
+def write_shipped_db(path: str) -> None:
+    """Write the seed-42 tables to a new SQLite file at ``path`` in the
+    shipped database's physical layout (SURVEY.md §1.3), traps included:
+
+    * ``strain_review_table`` has no ``strain_id`` column; row identity
+      is the implicit ``rowid`` (1..N_STRAINS, insertion order);
+    * each (``<slot>_id``, ``<slot>``) column pair holds an INTEGER id
+      into ``emotion_table`` and the score of THAT emotion, whatever
+      the slot's name says: the slot order is shuffled per row;
+    * ``emotion_table`` ids are not the slot order and its names are
+      capitalized.
+    """
+    rng = random.Random(SEED + 1)
+    emotion_ids = {e: 10 + i for i, e in enumerate(sorted(EMOTIONS))}
+    slot_cols = ", ".join(f"{e}_id INTEGER, {e} REAL" for e in EMOTIONS)
+    holes = ", ".join("?" * (2 * len(EMOTIONS)))
+
+    def slotted(scores: tuple) -> list:
+        by_emotion = list(zip(EMOTIONS, scores, strict=True))
+        rng.shuffle(by_emotion)
+        return [v for e, score in by_emotion for v in (emotion_ids[e], score)]
+
+    con = sqlite3.connect(path)
+    try:
+        con.execute(
+            "CREATE TABLE emotion_table (emotion_id INTEGER, emotion_name TEXT)"
+        )
+        con.executemany(
+            "INSERT INTO emotion_table VALUES (?, ?)",
+            [(i, e.title()) for e, i in emotion_ids.items()],
+        )
+        con.execute(
+            "CREATE TABLE episode_table (episode_id INTEGER, episode_name TEXT)"
+        )
+        con.executemany(
+            "INSERT INTO episode_table VALUES (?, ?)", episode_rows()
+        )
+        con.execute(
+            "CREATE TABLE episode_emotion_table "
+            f"(episode_id INTEGER, {slot_cols})"
+        )
+        con.executemany(
+            f"INSERT INTO episode_emotion_table VALUES (?, {holes})",
+            [(r[0], *slotted(r[1:])) for r in episode_emotion_rows()],
+        )
+        con.execute(
+            f"CREATE TABLE strain_review_table (strain_name TEXT, {slot_cols})"
+        )
+        con.executemany(
+            f"INSERT INTO strain_review_table VALUES (?, {holes})",
+            [(r[1], *slotted(r[2:])) for r in strain_review_rows()],
+        )
+        con.commit()
+    finally:
+        con.close()

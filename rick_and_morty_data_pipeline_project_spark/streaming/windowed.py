@@ -13,43 +13,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rick_and_morty_data_pipeline_project_spark.sources.corpus import (
+    events_schema,
+    load_table,
+    normalize_events_ts,
+)
+
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events table with ts normalized to
     session-tz TIMESTAMP — the streaming twin of
-    ``sources.corpus.load_table``, handling the same corpus-generator
-    variation (TIMESTAMP(NANOS) → bigint under the legacy conf;
-    naive TIMESTAMP(MICROS) → TIMESTAMP_NTZ → cast under the UTC
-    session tz).
+    ``sources.corpus.load_table``, sharing its schema resolution and
+    its ts normalization (see ``sources.corpus.normalize_events_ts``).
     """
-    # scoped save/set/restore (see sources/corpus.py): the conf is
-    # captured at analysis time; don't leak it into the caller's session
-    _conf = "spark.sql.legacy.parquet.nanosAsLong"
-    try:
-        prev = spark.conf.get(_conf)
-    except Exception:
-        prev = None
-    spark.conf.set(_conf, "true")
-    try:
-        static = spark.read.parquet(f"{sf_dir}/events.parquet")
-        # the file stream source requires a directory; filter to the
-        # events table inside the corpus dir
-        stream = (
-            spark.readStream.schema(static.schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset(_conf)
-        else:
-            spark.conf.set(_conf, prev)
-    ts_type = dict(stream.dtypes).get("ts")
-    if ts_type == "bigint":
-        return stream.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    if ts_type == "timestamp_ntz":
-        return stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    schema = events_schema(spark, f"{sf_dir}/events.parquet")
+    # the file stream source requires a directory; filter to the events
+    # table inside the corpus dir
+    stream = (
+        spark.readStream.schema(schema)
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(sf_dir)
+    )
+    return normalize_events_ts(stream)
 
 
 def stream_events_hourly(
@@ -116,7 +101,7 @@ def stream_enriched_hourly(
     changes re-read per batch, stream never buffered for the join.
     """
     events = events_stream(spark, sf_dir)
-    customers = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    customers = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
     return (

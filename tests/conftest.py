@@ -15,6 +15,6 @@ SF_ORACLE = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="engine-tests", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
+    s = get_spark(app_name="engine-tests")
     yield s
     s.stop()

@@ -46,7 +46,7 @@ def main() -> None:
     os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
     from rick_and_morty_data_pipeline_project_spark.session import get_spark
 
-    spark = get_spark(app_name="catalog-bench", cpus=32)
+    spark = get_spark(app_name="catalog-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as E

@@ -47,10 +47,7 @@ def main() -> None:
     from rick_and_morty_data_pipeline_project_spark.session import get_spark
     from tools.scale_stress import _scale_documents
 
-    spark = get_spark(
-        app_name="flagship-scale",
-        cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"),
-    )
+    spark = get_spark(app_name="flagship-scale")
     results: dict[str, dict] = {}
     for mult in mults:
         if mult == 1:
