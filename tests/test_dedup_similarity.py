@@ -602,13 +602,13 @@ def test_split_leakage_safe_property(spark):
     from rick_and_morty_data_pipeline_project_spark.operators.dedup import (
         minhash_lsh_pairs,
     )
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
+    from rick_and_morty_data_pipeline_project_spark.queries.catalog import QUERIES
     from rick_and_morty_data_pipeline_project_spark.sources.corpus import (
         load_table,
     )
 
     sf = "/root/testdata/sf0.001"
-    out = _ALL["split_leakage_safe"].fn(spark, sf)
+    out = QUERIES["split_leakage_safe"].fn(spark, sf)
     docs = load_table(spark, sf, "documents")
     assert out.count() == docs.count()
     split_of = {r["doc_id"]: r["split"] for r in out.collect()}
@@ -718,7 +718,7 @@ def test_winnowing_guarantee_and_density(spark):
     (= 6) tokens select at least one COMMON (positioned-anywhere)
     fingerprint hash; and selection density is far below the
     all-shingles baseline."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
+    from rick_and_morty_data_pipeline_project_spark.queries.catalog import QUERIES
     import tempfile, os
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -741,7 +741,7 @@ def test_winnowing_guarantee_and_density(spark):
             ),
             os.path.join(td, "documents.parquet"),
         )
-        out = _ALL["text_winnowing_fingerprints"].fn(spark, td).collect()
+        out = QUERIES["text_winnowing_fingerprints"].fn(spark, td).collect()
     by_doc = {}
     for r in out:
         by_doc.setdefault(r["doc_id"], set()).add(r["fp"])

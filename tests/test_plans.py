@@ -442,10 +442,8 @@ def test_jpeg_headers_plan_is_narrow(spark):
     BEFORE the codec stage (r14: the Python encoders ran 1-way on the
     single-file local scan); the binary column itself never crosses a
     shuffle boundary — no hash/range exchange anywhere."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
     plan = formatted_plan(
-        _ALL["multimodal_jpeg_headers"].fn(spark, SF_SMALL)
+        QUERIES["multimodal_jpeg_headers"].fn(spark, SF_SMALL)
     )
     assert "Exchange hashpartitioning" not in plan, plan
     assert "Exchange rangepartitioning" not in plan, plan
@@ -458,10 +456,8 @@ def test_jpeg_decode_audit_binary_never_shuffles(spark):
     binary content column must stay on the scan side of every
     exchange: only the text lookup broadcasts, and no shuffle
     partitioning carries the content column."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
     plan = formatted_plan(
-        _ALL["multimodal_jpeg_decode_audit"].fn(spark, SF_SMALL)
+        QUERIES["multimodal_jpeg_decode_audit"].fn(spark, SF_SMALL)
     )
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -480,10 +476,8 @@ def test_hll_audit_single_raw_aggregate_per_arm(spark):
     check); the TOTAL row's union arms aggregate sketch STATES, and
     every cross-join is one-row ⨯ one-row (broadcast), never a raw
     rescan per check."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
     plan = formatted_plan(
-        _ALL["sketch_hll_accuracy_audit"].fn(spark, SF_SMALL)
+        QUERIES["sketch_hll_accuracy_audit"].fn(spark, SF_SMALL)
     )
     assert "hll_sketch_agg" in plan and "hll_union_agg" in plan
     assert "CartesianProduct" not in plan
@@ -503,10 +497,8 @@ def test_cms_audit_probe_is_reduced_relation(spark):
     relation through ONE ArrowEvalPython (vectorized grid lookup) —
     raw events are never sent through Python, and N arrives as a
     one-row broadcast, not a rescan per item."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
     plan = formatted_plan(
-        _ALL["sketch_cms_accuracy_audit"].fn(spark, SF_SMALL)
+        QUERIES["sketch_cms_accuracy_audit"].fn(spark, SF_SMALL)
     )
     tree = plan.split("\n\n")[0]
     assert tree.count("ArrowEvalPython") == 1, tree
@@ -523,10 +515,8 @@ def test_approx_audit_single_production_aggregate(spark):
     median and exact distinct in ONE grouped aggregate over the fact
     scan; the rank check is a broadcast join-back plus one more scan —
     exactly two fact scans, no cartesian anywhere."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
     plan = formatted_plan(
-        _ALL["agg_approx_distinct_audit"].fn(spark, SF_SMALL)
+        QUERIES["agg_approx_distinct_audit"].fn(spark, SF_SMALL)
     )
     tree = plan.split("\n\n")[0]
     # 3 fact scans: production aggregate, the rank-count pass, and the
@@ -544,10 +534,8 @@ def test_remove_duplicate_spans_never_pairwise(spark):
     cartesian/nested-loop pair space, and a bounded number of corpus
     scans (staging, span side, dup-agg side; Catalyst does not share
     the staged subtree)."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
     plan = formatted_plan(
-        _ALL["dedup_remove_duplicate_spans"].fn(spark, SF_SMALL)
+        QUERIES["dedup_remove_duplicate_spans"].fn(spark, SF_SMALL)
     )
     tree = plan.split("\n\n")[0]
     assert "CartesianProduct" not in tree
@@ -728,9 +716,7 @@ def test_mp4_boxes_plan_is_narrow(spark):
     synthesize → MapInPandas parse, ZERO exchanges — container bytes
     never cross a shuffle boundary, only the 8-column audit result
     would (and here it feeds the sink directly)."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
-    plan = formatted_plan(_ALL["multimodal_mp4_boxes"].fn(spark, SF_SMALL))
+    plan = formatted_plan(QUERIES["multimodal_mp4_boxes"].fn(spark, SF_SMALL))
     # r14: fan_out's round-robin balance of the narrow (id, md5) source
     # is the one allowed exchange; container bytes still never shuffle
     assert "Exchange hashpartitioning" not in plan, plan
@@ -745,10 +731,8 @@ def test_range_partition_plan_no_global_sort_of_table(spark):
     validates (a global sort) must never appear in the audit itself:
     no rangepartitioning exchange, and the full-table side joins the
     cuts via BroadcastNestedLoopJoin (one-row build side)."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
     plan = formatted_plan(
-        _ALL["table_range_partition_plan"].fn(spark, SF_SMALL)
+        QUERIES["table_range_partition_plan"].fn(spark, SF_SMALL)
     )
     tree = plan.split("\n\n")[0]
     assert "rangepartitioning" not in tree.lower(), tree
@@ -761,9 +745,7 @@ def test_profile_drift_single_scan_conditional_aggregate(spark):
     scan: every per-snapshot metric is a conditional aggregate, so the
     plan is a single global aggregate (expand for the exact distincts)
     — no second pass, no join of profile rows, no window."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
-    plan = formatted_plan(_ALL["profile_drift_orders"].fn(spark, SF_SMALL))
+    plan = formatted_plan(QUERIES["profile_drift_orders"].fn(spark, SF_SMALL))
     tree = plan.split("\n\n")[0]
     assert len(re.findall(r"Scan parquet", tree)) == 1, tree
     assert "Join" not in tree, tree
@@ -776,9 +758,7 @@ def test_triangle_count_reuses_checkpointed_edges(spark):
     closure joins from it — the final plan reads only the checkpointed
     RDD, never the parquet/LSH pipeline (which a naive 5-way self-join
     would recompute per branch)."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
-    plan = formatted_plan(_ALL["graph_triangle_count"].fn(spark, SF_SMALL))
+    plan = formatted_plan(QUERIES["graph_triangle_count"].fn(spark, SF_SMALL))
     assert "Scan parquet" not in plan, plan
     assert "ExistingRDD" in plan, plan
 
@@ -787,9 +767,7 @@ def test_k_anonymity_single_aggregate(spark):
     """The privacy audit is one pruned scan + one QI-keyed aggregate
     (expand for the exact sensitive-value distinct) — no join, no
     window; the class relation is |QI domain| rows at any table size."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
-    plan = formatted_plan(_ALL["privacy_k_anonymity"].fn(spark, SF_SMALL))
+    plan = formatted_plan(QUERIES["privacy_k_anonymity"].fn(spark, SF_SMALL))
     tree = plan.split("\n\n")[0]
     assert len(re.findall(r"Scan parquet", tree)) == 1, tree
     assert "Join" not in tree, tree
@@ -800,9 +778,7 @@ def test_row_constraints_one_scan_for_whole_suite(spark):
     """Every CHECK rule must be a conditional count in the SAME
     aggregate: one scan however long the suite grows, stack unpivot
     after the 1-row agg — no join, no per-rule pass."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
-    plan = formatted_plan(_ALL["audit_row_constraints"].fn(spark, SF_SMALL))
+    plan = formatted_plan(QUERIES["audit_row_constraints"].fn(spark, SF_SMALL))
     tree = plan.split("\n\n")[0]
     assert len(re.findall(r"Scan parquet", tree)) == 1, tree
     assert "Join" not in tree, tree
@@ -812,9 +788,7 @@ def test_kcore_peel_reuses_checkpointed_edges(spark):
     """All three peel rounds (degree agg + two semi joins each) must
     read the once-checkpointed LSH edge list — zero parquet scans in
     the peeling plan, and the induced-subgraph joins are LeftSemi."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
-    plan = formatted_plan(_ALL["graph_kcore_peel"].fn(spark, SF_SMALL))
+    plan = formatted_plan(QUERIES["graph_kcore_peel"].fn(spark, SF_SMALL))
     assert "Scan parquet" not in plan, plan
     assert "ExistingRDD" in plan, plan
     assert "LeftSemi" in plan, plan
@@ -824,9 +798,7 @@ def test_chi2_single_scan_tiny_relation_joins(spark):
     """The chi-square statistic must build the contingency table from
     ONE scan; marginals and expected counts join over that tiny
     relation (broadcast N) — never a second pass over events."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
-    plan = formatted_plan(_ALL["events_chi2_type_dow"].fn(spark, SF_SMALL))
+    plan = formatted_plan(QUERIES["events_chi2_type_dow"].fn(spark, SF_SMALL))
     tree = plan.split("\n\n")[0]
     assert len(re.findall(r"Scan parquet", tree)) == 1, tree
 
@@ -837,9 +809,7 @@ def test_survival_km_windows_over_duration_grain(spark):
     first-signup window and first-eligible-purchase aggregate share
     the user partitioning); the two-relation join form re-scanned
     events 3×."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
-    plan = formatted_plan(_ALL["events_survival_km"].fn(spark, SF_SMALL))
+    plan = formatted_plan(QUERIES["events_survival_km"].fn(spark, SF_SMALL))
     tree = plan.split("\n\n")[0]
     assert len(re.findall(r"Scan parquet", tree)) == 1, tree
     assert "Join" not in tree, tree
@@ -849,9 +819,7 @@ def test_ab_ztest_single_scan(spark):
     """The A/B z-test is one type-pruned scan + user aggregate; arm
     totals and the statistic are windows/arithmetic over the 2-row arm
     relation — no join, no second pass over events."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
-    plan = formatted_plan(_ALL["events_ab_proportion_z"].fn(spark, SF_SMALL))
+    plan = formatted_plan(QUERIES["events_ab_proportion_z"].fn(spark, SF_SMALL))
     tree = plan.split("\n\n")[0]
     assert len(re.findall(r"Scan parquet", tree)) == 1, tree
     assert "Join" not in tree, tree
@@ -862,9 +830,7 @@ def test_bpe_encode_stays_jvm_and_type_relation_sized(spark):
     the word-TYPE relation — no Python stage anywhere, and the only
     corpus-sized relations are the two document scans (word count +
     positioned re-join), same as the stats query."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
-    plan = formatted_plan(_ALL["text_bpe_encode"].fn(spark, SF_SMALL))
+    plan = formatted_plan(QUERIES["text_bpe_encode"].fn(spark, SF_SMALL))
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, plan
     assert "CartesianProduct" not in plan, plan
     tree = plan.split("\n\n")[0]
@@ -882,9 +848,8 @@ def test_tfidf_cosine_dense_path_on_bounded_shape(spark):
     from pyspark.sql import functions as F
 
     from rick_and_morty_data_pipeline_project_spark.queries import textq
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
 
-    plan = formatted_plan(_ALL["text_tfidf_cosine_pairs"].fn(spark, SF_SMALL))
+    plan = formatted_plan(QUERIES["text_tfidf_cosine_pairs"].fn(spark, SF_SMALL))
     # the pair-quadratic prefilter already ran into the checkpoint:
     # nothing quadratic — and no pair-keyed aggregation shuffle — may
     # survive in the returned verify plan
@@ -924,9 +889,7 @@ def test_key_gaps_windows_on_bucket_relation_only(spark):
     sort: one bucket-keyed aggregate over the scan, then the lag
     window runs on the bucket relation (|keyspace|/10k rows) — one
     parquet scan, no join."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
-    plan = formatted_plan(_ALL["audit_key_gaps"].fn(spark, SF_SMALL))
+    plan = formatted_plan(QUERIES["audit_key_gaps"].fn(spark, SF_SMALL))
     tree = plan.split("\n\n")[0]
     assert len(re.findall(r"Scan parquet", tree)) == 1, tree
     assert "Join" not in tree, tree
@@ -937,9 +900,7 @@ def test_lsh_recall_audit_never_all_pairs(spark):
     truth is the inverted-index posting join (with the Jaccard length
     filter inside it) and the candidates come from band buckets —
     no cartesian product anywhere in the plan."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
-    plan = formatted_plan(_ALL["dedup_lsh_recall_audit"].fn(spark, SF_SMALL))
+    plan = formatted_plan(QUERIES["dedup_lsh_recall_audit"].fn(spark, SF_SMALL))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
@@ -991,9 +952,7 @@ def test_benford_audit_single_scan(spark):
     """The Benford screen is one pruned scan + one 9-group aggregate;
     expected counts are closed-form over the digit relation — no join,
     no second pass."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
-    plan = formatted_plan(_ALL["audit_benford_prices"].fn(spark, SF_SMALL))
+    plan = formatted_plan(QUERIES["audit_benford_prices"].fn(spark, SF_SMALL))
     tree = plan.split("\n\n")[0]
     assert len(re.findall(r"Scan parquet", tree)) == 1, tree
     assert "Join" not in tree, tree
@@ -1003,9 +962,7 @@ def test_hhi_window_on_supplier_grain(spark):
     """HHI must compute shares on the supplier-grain aggregate (the
     nation window sees |suppliers| rows, never fact rows) with the
     supplier dim broadcast — one fact scan."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
-    plan = formatted_plan(_ALL["supplier_market_hhi"].fn(spark, SF_SMALL))
+    plan = formatted_plan(QUERIES["supplier_market_hhi"].fn(spark, SF_SMALL))
     tree = plan.split("\n\n")[0]
     assert "BroadcastHashJoin" in tree, tree
     assert len(re.findall(r"Scan parquet", tree)) == 2, tree
@@ -1016,10 +973,8 @@ def test_hourly_pctl_audit_two_bounded_fact_scans(spark):
     the production plan; the rank check is ONE more fact scan joined
     to the tiny per-group approx relation via broadcast — exactly two
     events scans, no per-quantile rescan, no cartesian."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
     plan = formatted_plan(
-        _ALL["events_hourly_percentiles_approx_audit"].fn(spark, SF_SMALL)
+        QUERIES["events_hourly_percentiles_approx_audit"].fn(spark, SF_SMALL)
     )
     assert "approx_percentile" in plan or "percentile_approx" in plan, plan
     assert "CartesianProduct" not in plan, plan
@@ -1038,10 +993,8 @@ def test_rfm_audit_customer_grain_only(spark):
     the 9 thresholds travel as a one-row broadcast; the 9 output rows
     come from exploding one aggregated row — never a per-quantile
     rescan of orders (2 scans total)."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
     plan = formatted_plan(
-        _ALL["customer_rfm_segments_approx_audit"].fn(spark, SF_SMALL)
+        QUERIES["customer_rfm_segments_approx_audit"].fn(spark, SF_SMALL)
     )
     assert "CartesianProduct" not in plan, plan
     tree = plan.split("\n\n")[0]
@@ -1057,9 +1010,7 @@ def test_interval_join_is_bucketized_equi_join(spark):
     must run as a bucket-keyed HASH join with the BETWEEN as residual
     filter — never the BroadcastNestedLoopJoin Spark plans for a bare
     range predicate (|orders|·|promos| comparisons)."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
-    plan = formatted_plan(_ALL["join_interval_bucketized"].fn(spark, SF_SMALL))
+    plan = formatted_plan(QUERIES["join_interval_bucketized"].fn(spark, SF_SMALL))
     tree = plan.split("\n\n")[0]
     assert "CartesianProduct" not in plan, plan
     # the interval⋈point join itself is a hash join on the bucket key
@@ -1075,9 +1026,7 @@ def test_jaccard_prefix_join_never_all_pairs(spark):
     posting join (keyed on the shingle) — no BroadcastNestedLoopJoin,
     no CartesianProduct, and the posting relation is checkpointed so
     the corpus is never re-tokenized per arm."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
-    plan = formatted_plan(_ALL["dedup_jaccard_prefix_join"].fn(spark, SF_SMALL))
+    plan = formatted_plan(QUERIES["dedup_jaccard_prefix_join"].fn(spark, SF_SMALL))
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "Scan parquet" not in plan, plan
@@ -1118,9 +1067,7 @@ def test_pii_redact_is_narrow(spark):
     """PII scrub is a pure projection: one documents scan, zero
     exchanges, no Python — counts and the chained redaction are
     codegen'd regex expressions."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
-    plan = formatted_plan(_ALL["text_pii_redact"].fn(spark, SF_SMALL))
+    plan = formatted_plan(QUERIES["text_pii_redact"].fn(spark, SF_SMALL))
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     tree = plan.split("\n\n")[0]
     assert not re.findall(r"\(\d+\) Exchange", tree), tree
@@ -1132,9 +1079,7 @@ def test_source_mixture_single_rank_window_per_source(spark):
     aggregate broadcast back; document selection is ONE rank window
     partitioned by source over one corpus scan arm — never a
     per-source rescan or a cartesian."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
-    plan = formatted_plan(_ALL["sample_source_mixture"].fn(spark, SF_SMALL))
+    plan = formatted_plan(QUERIES["sample_source_mixture"].fn(spark, SF_SMALL))
     assert "CartesianProduct" not in plan, plan
     tree = plan.split("\n\n")[0]
     assert tree.count("Window") == 1, tree
@@ -1172,9 +1117,7 @@ def test_table_checksum_three_scans_no_sort(spark):
     map-combinable sum per audited table — three scans, no Sort, no
     Window, no Join anywhere (an order-dependent plan would defeat the
     order-insensitive fold)."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
-    plan = formatted_plan(_ALL["audit_table_checksum"].fn(spark, SF_SMALL))
+    plan = formatted_plan(QUERIES["audit_table_checksum"].fn(spark, SF_SMALL))
     tree = plan.split("\n\n")[0]
     assert len(re.findall(r"Scan parquet", tree)) == 3, tree
     assert "Join" not in tree, tree
@@ -1186,9 +1129,7 @@ def test_pit_join_is_keyed_hash_join(spark):
     dimension key with the temporal interval as a residual filter —
     never a BroadcastNestedLoopJoin over orders × versions (what a
     bare range predicate would produce)."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
-    plan = formatted_plan(_ALL["join_pit_segment_revenue"].fn(spark, SF_SMALL))
+    plan = formatted_plan(QUERIES["join_pit_segment_revenue"].fn(spark, SF_SMALL))
     tree = plan.split("\n\n")[0]
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in tree, tree
@@ -1201,10 +1142,8 @@ def test_topk_salted_exemplar_two_stage_plan(spark):
     window partitioned by (segment, _salt), a second bounded re-rank
     window — and never a single global window over the raw fact rows
     partitioned by the 5-value segment key alone."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
     plan = formatted_plan(
-        _ALL["topk_salted_segment_orders"].fn(spark, SF_SMALL)
+        QUERIES["topk_salted_segment_orders"].fn(spark, SF_SMALL)
     )
     assert "CartesianProduct" not in plan, plan
     tree = plan.split("\n\n")[0]
@@ -1220,10 +1159,8 @@ def test_skyline_dimension_reduction_plan(spark):
     minima (tiny relation) → prefix-min window over THAT spine only →
     broadcast join back.  Never a self-join NOT EXISTS, never a window
     or sort over the raw order rows."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
     plan = formatted_plan(
-        _ALL["orders_skyline_price_date"].fn(spark, SF_SMALL)
+        QUERIES["orders_skyline_price_date"].fn(spark, SF_SMALL)
     )
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
@@ -1241,9 +1178,7 @@ def test_kmv_rollup_salted_per_day_and_heap_total(spark):
     from a TakeOrderedAndProject heap — never a bare per-day rank
     window over the full distinct-pair relation, never a global
     sort."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
-    plan = formatted_plan(_ALL["sketch_kmv_rollup"].fn(spark, SF_SMALL))
+    plan = formatted_plan(QUERIES["sketch_kmv_rollup"].fn(spark, SF_SMALL))
     assert "_salt" in plan, plan
     specs = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
     assert any("_salt" in s for s in specs), plan
@@ -1254,9 +1189,7 @@ def test_cdc_apply_keyed_window_no_sort(spark):
     """CDC apply resolves versions with one rank window partitioned by
     the high-cardinality order key over a union of narrow projections —
     no global sort, no join (the log is derived in-plan)."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
-    plan = formatted_plan(_ALL["orders_cdc_apply"].fn(spark, SF_SMALL))
+    plan = formatted_plan(QUERIES["orders_cdc_apply"].fn(spark, SF_SMALL))
     tree = plan.split("\n\n")[0]
     assert len(re.findall(r"\bWindow\b", tree)) == 1, tree
     assert "Join" not in tree, tree
@@ -1268,9 +1201,7 @@ def test_sequence_match_regex_stays_jvm_side(spark):
     string and evaluates the pattern regexes as codegen'd JVM
     expressions — no Python UDF, one scan, one shuffle (the user-key
     aggregate)."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
-    plan = formatted_plan(_ALL["events_sequence_match"].fn(spark, SF_SMALL))
+    plan = formatted_plan(QUERIES["events_sequence_match"].fn(spark, SF_SMALL))
     assert "BatchEvalPython" not in plan, plan
     assert "ArrowEvalPython" not in plan, plan
     tree = plan.split("\n\n")[0]
@@ -1281,10 +1212,8 @@ def test_fd_audit_union_of_narrow_aggregates(spark):
     """The FD audit is a union of independent two-column aggregate
     arms — one scan per candidate, map-combinable count_distinct
     partials, never a self-join, never a window, never a sort."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
     plan = formatted_plan(
-        _ALL["audit_functional_dependencies"].fn(spark, SF_SMALL)
+        QUERIES["audit_functional_dependencies"].fn(spark, SF_SMALL)
     )
     tree = plan.split("\n\n")[0]
     assert "Union" in tree, tree
@@ -1299,9 +1228,7 @@ def test_transition_matrix_two_windows_one_scan(spark):
     """Transition matrix: one scan, the lead() window on the
     high-cardinality user key, and the probability normalizer window
     over the tiny (from,to) count relation — no join, no Python."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
-    plan = formatted_plan(_ALL["events_transition_matrix"].fn(spark, SF_SMALL))
+    plan = formatted_plan(QUERIES["events_transition_matrix"].fn(spark, SF_SMALL))
     tree = plan.split("\n\n")[0]
     assert len(re.findall(r"Scan parquet", tree)) == 1, tree
     assert len(re.findall(r"\bWindow\b", tree)) == 2, tree
@@ -1314,9 +1241,7 @@ def test_trend_slope_exact_sums_no_join(spark):
     one map-combinable aggregate of exact sufficient statistics —
     no join back, no Python, closed-form doubles only in the final
     projection."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
-    plan = formatted_plan(_ALL["events_user_trend_slope"].fn(spark, SF_SMALL))
+    plan = formatted_plan(QUERIES["events_user_trend_slope"].fn(spark, SF_SMALL))
     tree = plan.split("\n\n")[0]
     assert len(re.findall(r"Scan parquet", tree)) == 1, tree
     assert len(re.findall(r"\bWindow\b", tree)) == 1, tree
@@ -1330,9 +1255,7 @@ def test_weighted_percentiles_pass2_pushes_bucket_ranges(spark):
     BETWEEN range on the raw price column, and the only windows rank
     within a single bucket's distinct values (partitioned by _b),
     never the full table."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
-    df = _ALL["lineitem_weighted_percentiles"].fn(spark, SF_SMALL)
+    df = QUERIES["lineitem_weighted_percentiles"].fn(spark, SF_SMALL)
     plan = formatted_plan(df)
     pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
     assert pushed and all("l_extendedprice" in p for p in pushed), plan
@@ -1345,9 +1268,7 @@ def test_concurrency_segmented_prefix_sum_plan(spark):
     within-(day,hr) segments and the per-day hour-block offsets) —
     never an unpartitioned ORDER BY instant — and the block offsets
     come back via a broadcast join."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
-    plan = formatted_plan(_ALL["events_max_concurrency"].fn(spark, SF_SMALL))
+    plan = formatted_plan(QUERIES["events_max_concurrency"].fn(spark, SF_SMALL))
     specs = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
     assert specs, plan
     assert all("day" in s for s in specs), specs
@@ -1363,10 +1284,8 @@ def test_concurrency_segmented_prefix_sum_plan(spark):
 def test_cusum_windows_bounded_by_calendar(spark):
     """CUSUM's windows all run over the daily-count relation
     partitioned by event_type; one scan of events; no Python."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
     plan = formatted_plan(
-        _ALL["events_cusum_changepoint"].fn(spark, SF_SMALL)
+        QUERIES["events_cusum_changepoint"].fn(spark, SF_SMALL)
     )
     tree = plan.split("\n\n")[0]
     assert len(re.findall(r"Scan parquet", tree)) == 1, tree
@@ -1379,9 +1298,7 @@ def test_jsd_token_equijoin_with_broadcast_totals(spark):
     """JSD pairs come from a token-keyed equi-join (co-occurrence
     shape) with per-source totals broadcast — never a cartesian or
     nested-loop pair enumeration."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
-    plan = formatted_plan(_ALL["text_js_divergence"].fn(spark, SF_SMALL))
+    plan = formatted_plan(QUERIES["text_js_divergence"].fn(spark, SF_SMALL))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "BroadcastHashJoin" in plan, plan
@@ -1396,9 +1313,7 @@ def test_bootstrap_stays_jvm_side_one_scan_per_arm(spark):
     """The Poisson bootstrap is pure JVM codegen: md5/conv/CASE inside
     the exploded map stage, no Python eval anywhere; the only join is
     the broadcast cross of the two ONE-ROW summary arms."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
-    plan = formatted_plan(_ALL["stats_bootstrap_ci"].fn(spark, SF_SMALL))
+    plan = formatted_plan(QUERIES["stats_bootstrap_ci"].fn(spark, SF_SMALL))
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert re.search(r"\bGenerate\b", plan), plan
     assert not re.search(r"\bSortMergeJoin\b", plan), plan
@@ -1408,10 +1323,8 @@ def test_bootstrap_stays_jvm_side_one_scan_per_arm(spark):
 def test_acf_windows_bounded_by_calendar(spark):
     """Autocorrelation windows (centering + the lead lags) all run on
     the |types|x|days| daily relation partitioned by event_type."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
     plan = formatted_plan(
-        _ALL["events_autocorrelation"].fn(spark, SF_SMALL)
+        QUERIES["events_autocorrelation"].fn(spark, SF_SMALL)
     )
     specs = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
     assert specs and all("event_type" in s for s in specs), specs
@@ -1426,9 +1339,7 @@ def test_gini_ranks_within_buckets_only(spark):
     """Gini's ranking windows are partitioned by the value-range
     bucket (segmented ranking) with the rank offsets broadcast back —
     never a global unpartitioned row_number."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
-    plan = formatted_plan(_ALL["customer_gini_revenue"].fn(spark, SF_SMALL))
+    plan = formatted_plan(QUERIES["customer_gini_revenue"].fn(spark, SF_SMALL))
     specs = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
     assert specs and all("bucket" in s for s in specs), specs
     assert "BroadcastHashJoin" in plan, plan
@@ -1437,9 +1348,7 @@ def test_welch_t_single_pruned_aggregate(spark):
     """Welch's t-test is one type-pruned scan feeding one conditional
     aggregate row — the filter reaches parquet, no join, no window,
     no Python."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
-    df = _ALL["stats_welch_t"].fn(spark, SF_SMALL)
+    df = QUERIES["stats_welch_t"].fn(spark, SF_SMALL)
     plan = formatted_plan(df)
     tree = plan.split("\n\n")[0]
     assert len(re.findall(r"Scan parquet", tree)) == 1, tree
@@ -1453,9 +1362,7 @@ def test_welch_t_single_pruned_aggregate(spark):
 def test_streaks_window_on_user_key(spark):
     """Gaps-and-islands streaks: the row_number window is partitioned
     by the high-cardinality user key; one pruned scan; no join."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
-    df = _ALL["events_activity_streaks"].fn(spark, SF_SMALL)
+    df = QUERIES["events_activity_streaks"].fn(spark, SF_SMALL)
     plan = formatted_plan(df)
     tree = plan.split("\n\n")[0]
     assert len(re.findall(r"Scan parquet", tree)) == 1, tree
@@ -1472,9 +1379,7 @@ def test_pq_adc_query_plan(spark):
     the per-query top-k is the salted two-stage exact top-k (stage-1
     window partitioned by (query_id, _salt)) — never |queries| scan
     branches, never a bare per-query rank window."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
-    df = _ALL["knn_cosine_pq"].fn(spark, SF_SMALL)
+    df = QUERIES["knn_cosine_pq"].fn(spark, SF_SMALL)
     plan = formatted_plan(df)
     # exactly two ExistingRDD scans in the tree: the materialized
     # codes relation (once — not per query) and the broadcast LUT
@@ -1492,9 +1397,7 @@ def test_ivfpq_probed_scan_plan(spark):
     """knn_cosine_ivfpq: the broadcast equi-join ON cell_id IS the
     probe — only rows in some query's probed cells are scored, in one
     scan of the index relation — then the salted two-stage top-k."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
-    df = _ALL["knn_cosine_ivfpq"].fn(spark, SF_SMALL)
+    df = QUERIES["knn_cosine_ivfpq"].fn(spark, SF_SMALL)
     plan = formatted_plan(df)
     # index relation scanned once + the broadcast (query, cell, LUT)
     # relation; the equi-join key is the int cell_id
@@ -1512,9 +1415,7 @@ def test_orders_dense_row_ids_plan_window_free(spark):
     operator anywhere (the oracle's row_number formulation is exactly
     what the plan must NOT contain) and the only wide exchange is the
     range repartition."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
-    df = _ALL["orders_dense_row_ids"].fn(spark, SF_SMALL)
+    df = QUERIES["orders_dense_row_ids"].fn(spark, SF_SMALL)
     plan = formatted_plan(df)
     assert "windowspecdefinition" not in plan, plan
     assert "Window" not in plan, plan
@@ -1526,9 +1427,7 @@ def test_kmv_set_ops_joins_are_hash_joinable(spark):
     touching the distinct (type, user) relation or the sketch rows is
     a broadcast HASH join — the OR-of-equalities formulation that
     would nested-loop the full relation is pinned out."""
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
-
-    df = _ALL["sketch_kmv_set_ops"].fn(spark, SF_SMALL)
+    df = QUERIES["sketch_kmv_set_ops"].fn(spark, SF_SMALL)
     plan = formatted_plan(df)
     tree = plan.split("\n\n")[0]
     assert "BroadcastNestedLoopJoin" not in tree, tree

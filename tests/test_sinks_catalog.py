@@ -587,7 +587,7 @@ def test_profile_table_files_multi_file(spark, tmp_path):
     import pyarrow.parquet as _pq
     from pyspark.sql import functions as F
 
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
+    from rick_and_morty_data_pipeline_project_spark.queries.catalog import QUERIES
 
     src = spark.range(0, 1000).select(
         F.col("id").alias("l_orderkey"),
@@ -597,7 +597,7 @@ def test_profile_table_files_multi_file(spark, tmp_path):
     out = str(tmp_path / "lineitem.parquet")
     src.repartition(4, "l_orderkey").write.parquet(out)
 
-    audited = _ALL["profile_table_files"].fn(spark, str(tmp_path)).collect()
+    audited = QUERIES["profile_table_files"].fn(spark, str(tmp_path)).collect()
     got = {r["file"]: (r["n_rows"], r["min_orderkey"], r["max_orderkey"]) for r in audited}
     files = [f for f in _glob.glob(f"{out}/*.parquet")]
     assert len(files) == 4 and len(got) == 4
@@ -623,11 +623,11 @@ def test_footer_stats_match_scanning_audit(spark, tmp_path):
     out = str(tmp_path / "lineitem.parquet")
     src.repartition(6, "l_orderkey").write.parquet(out)
 
-    from rick_and_morty_data_pipeline_project_spark.queries.catalog import _ALL
+    from rick_and_morty_data_pipeline_project_spark.queries.catalog import QUERIES
 
     scan = {
         r["file"]: (r["n_rows"], r["min_orderkey"], r["max_orderkey"])
-        for r in _ALL["profile_table_files"].fn(spark, str(tmp_path)).collect()
+        for r in QUERIES["profile_table_files"].fn(spark, str(tmp_path)).collect()
     }
     footer = {
         r["file"]: (r["n_rows"], r["min_key"], r["max_key"])

@@ -433,52 +433,6 @@ def test_stream_dedup_state_survives_restart(spark, tmp_path):
     assert 3 not in ids, "restored state failed to drop the cross-run dup"
 
 
-def test_transform_with_state_running_totals(spark):
-    """Spark 4 transformWithStateInPandas (typed StatefulProcessor):
-    after the stream drains, each user's running totals equal the batch
-    groupBy aggregate (float sums compared at 1e-6).  Skipped where the
-    worker's protobuf dependency is absent (this container)."""
-    import pytest
-
-    from rick_and_morty_data_pipeline_project_spark.sources.corpus import load_table
-    from rick_and_morty_data_pipeline_project_spark.streaming.stateful_v2 import (
-        TWS_AVAILABLE,
-        running_user_totals,
-    )
-
-    if not TWS_AVAILABLE:
-        pytest.skip(
-            "transformWithState needs google.protobuf (state-server "
-            "protocol); not installed in this container"
-        )
-    from rick_and_morty_data_pipeline_project_spark.streaming.windowed import (
-        events_stream,
-    )
-    from pyspark.sql import functions as F
-
-    out = running_user_totals(events_stream(spark, SF_SMALL))
-    assert out.isStreaming
-    run_available_now(out, "tws_totals", output_mode="update")
-    # update mode: keep the LAST emitted row per user
-    import collections
-
-    last = {}
-    for r in spark.sql("SELECT * FROM tws_totals").collect():
-        last[r["user_id"]] = (r["n_events"], r["sum_value"])
-
-    batch = (
-        load_table(spark, SF_SMALL, "events")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("s"))
-        .collect()
-    )
-    want = {r["user_id"]: (r["n"], r["s"]) for r in batch}
-    assert last.keys() == want.keys()
-    for u in want:
-        assert last[u][0] == want[u][0], u
-        assert abs(last[u][1] - want[u][1]) < 1e-6, u
-
-
 def test_stream_ingest_neardup_lsh(spark, tmp_path):
     """foreachBatch near-dup ingest: vs-corpus, in-batch (transitive via
     connected components, min-id keeper), and cross-batch near-dups are

@@ -4,6 +4,7 @@ operators/randproj.py; driver queries in queries/vecxq.py)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from rick_and_morty_data_pipeline_project_spark.operators.binquant import (
@@ -195,8 +196,6 @@ def test_gemm_graph_rounding_margin():
 
 
 def test_gemm_graph_cap_guard(spark):
-    import pytest
-
     from rick_and_morty_data_pipeline_project_spark.operators.gemmknn import (
         knn_graph_gemm,
     )
@@ -244,6 +243,32 @@ def test_recall_matrix_consistency(spark):
     # SQ8 is the gentlest tier: 8-bit codes must not lose more recall
     # than the 1-bit sign codes
     assert mean["sq8"] >= mean["binary"] - 1e-9
+
+
+@pytest.mark.parametrize(
+    "name", ["knn_recall_matrix", "knn_frontier_recall_cost"]
+)
+def test_arm_pool_shut_down_when_builder_raises(spark, monkeypatch, name):
+    # a variant builder that raises must not leave the concurrent-arm
+    # pool's worker threads (or their in-flight jobs) running
+    import threading
+
+    from rick_and_morty_data_pipeline_project_spark.operators import sq
+    from rick_and_morty_data_pipeline_project_spark.queries import vecxq
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("sq8 builder failed")
+
+    monkeypatch.setattr(sq, "knn_sq8", boom)
+    before = set(threading.enumerate())
+    with pytest.raises(RuntimeError, match="sq8 builder failed"):
+        getattr(vecxq, name)(spark, SF_ORACLE)
+    leaked = [
+        th.name
+        for th in threading.enumerate()
+        if th not in before and th.name.startswith("ThreadPoolExecutor-")
+    ]
+    assert leaked == []
 
 
 def test_jl_norm_ratio_concentration(spark):

@@ -174,11 +174,10 @@ def main() -> None:
                     f"unknown --tables= names: {sorted(bad_tables)}"
                 )
 
-    from pyspark.sql import SparkSession
-
     from rick_and_morty_data_pipeline_project_spark.queries.catalog import (
         QUERIES as CAT,
     )
+    from rick_and_morty_data_pipeline_project_spark.session import get_spark
 
     # validate the battery BEFORE the expensive N-times staging: a
     # typo'd --queries= name must fail in milliseconds, not after
@@ -187,12 +186,7 @@ def main() -> None:
     if unknown:
         raise SystemExit(f"unknown --queries= names: {unknown}")
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="scale-stress")
     spark.sparkContext.setLogLevel("ERROR")
 
     scaled = tempfile.mkdtemp(prefix="spark_graft_scale_")
